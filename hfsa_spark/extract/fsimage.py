@@ -15,25 +15,35 @@ Sections consumed (same four as the reference):
 * INODE_DIR        — parent → children adjacency (packed varints)
 * INODE_REFERENCE  — snapshot/rename indirection for refChildren
 
-Scale: full message *decode* is distributed. The driver walks only the
-delimited-message varint length prefixes of the INODE / INODE_DIR sections
-(read length, skip payload — O(#messages) cheap byte reads, no field
-decoding) to emit byte-range chunk specs; executors then read their
-(offset, length) slice and decode messages in parallel via Arrow
-``mapInPandas`` (``load_fsimage(distributed=True)``, auto-enabled past
-``_DISTRIBUTED_THRESHOLD`` section bytes). Parent wiring is a distributed
-join of the inode rows against (parent, child) edges decoded from the
-INODE_DIR section — no O(#inodes) driver dict. Compressed images (gzip /
-DefaultCodec are not splittable) are streaming-decompressed once,
-driver-side with constant memory, into a scratch file that the chunk reads
-then address; in cluster mode point ``scratch_dir`` at storage every
-executor can read. Small images stay on the single-pass driver path
-(``parse_fsimage``) — no executor round-trip for a 2 KB test image.
+One reader, two schedulers. Every section is read the same way: the
+footer (:func:`_read_footer`) gives its offset and length, and
+:func:`_decompress_stream` decodes that bounded slice of the image
+through the footer's codec, writing through a callback — into memory
+(:func:`_read_section`) or into a scratch file
+(:func:`_decompress_to_file`) — as the reference reads every section
+through one codec-wrapped stream (FsImageLoader.java:268). With no codec
+a section read is a plain read. Messages are split by one framing loop
+(:func:`_messages`) and decoded by the same functions
+(:func:`_parse_inode`, :func:`_parse_dir_entry`) on either schedule:
+
+* driver (:func:`parse_fsimage`; ``load_fsimage`` picks it below
+  ``_DISTRIBUTED_THRESHOLD`` INODE bytes): every section is read by seek
+  and decoded in one pass; parents come from a ``parent_of`` dict.
+* distributed (:func:`load_fsimage_distributed`): the driver decodes the
+  small sections and walks only the varint length prefixes of the INODE /
+  INODE_DIR sections (read length, skip payload) to emit byte-range chunk
+  specs; executors decode the chunks in parallel via Arrow
+  ``mapInPandas``, and parents are wired by a join against the decoded
+  (parent, child) edges — no O(#inodes) driver dict. A compressed image
+  (gzip / DefaultCodec are not splittable) is decompressed once,
+  driver-side at constant memory, into a scratch file that the chunk
+  reads then address; large LZO sections decode block-parallel on a
+  local process pool. In cluster mode point ``scratch_dir`` at storage
+  every executor can read.
 """
 
 from __future__ import annotations
 
-import gzip
 import hashlib
 import io
 import mmap
@@ -42,10 +52,12 @@ import struct
 import tempfile
 import zlib
 from dataclasses import dataclass, field
+from itertools import islice
+from typing import BinaryIO, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hfsa_spark.schema import INODES_SCHEMA, ROOT_INODE_ID
+from hfsa_spark.schema import INODES_SCHEMA
 from hfsa_spark.extract.pathmat import finalize_inodes, materialize_paths
 
 MAGIC = b"HDFSIMG1"
@@ -113,21 +125,14 @@ def _packed_varints(val: int | bytes) -> list[int]:
     return out
 
 
-class _DelimitedReader:
-    """Reader over a section's (decompressed) bytes: writeDelimitedTo framing
-    (varint length prefix per message)."""
-
-    def __init__(self, data: bytes):
-        self._data = data
-        self._pos = 0
-
-    def next_message(self) -> bytes | None:
-        if self._pos >= len(self._data):
-            return None
-        ln, self._pos = _read_varint(self._data, self._pos)
-        msg = self._data[self._pos : self._pos + ln]
-        self._pos += ln
-        return msg
+def _messages(data: bytes) -> Iterator[bytes]:
+    """writeDelimitedTo framing: each message of a section's (decompressed)
+    bytes, in order, without its varint length prefix."""
+    pos, n = 0, len(data)
+    while pos < n:
+        ln, pos = _read_varint(data, pos)
+        yield data[pos : pos + ln]
+        pos += ln
 
 
 # ------------------------------------------------------- section parsing --
@@ -159,15 +164,20 @@ class _StringTable:
         return self.entries.get(sid, "") or ""
 
 
-def _parse_file_summary(raw: bytes) -> tuple[str, list[_Section]]:
-    if not raw.startswith(MAGIC):
-        raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
-    (summary_len,) = struct.unpack_from(">i", raw, len(raw) - 4)
-    reader = _DelimitedReader(raw[len(raw) - 4 - summary_len : len(raw) - 4])
-    msg = reader.next_message()
+def _read_footer(path: str) -> tuple[str, list[_Section]]:
+    """Parse codec + section index from the FileSummary footer by reading
+    only the file head (magic) and tail — no full-image read."""
+    with open(path, "rb") as f:
+        if f.read(len(MAGIC)) != MAGIC:
+            raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
+        f.seek(-4, os.SEEK_END)
+        end = f.tell()
+        (summary_len,) = struct.unpack(">i", f.read(4))
+        f.seek(end - summary_len)
+        summary = f.read(summary_len)
     codec = ""
     sections: list[_Section] = []
-    for fno, val in _iter_fields(msg):
+    for fno, val in _iter_fields(next(_messages(summary))):
         if fno == 3:
             codec = val.decode("utf-8")
         elif fno == 4:
@@ -181,6 +191,51 @@ def _parse_file_summary(raw: bytes) -> tuple[str, list[_Section]]:
                     offset = sval
             sections.append(_Section(name, length, offset))
     return codec, sections
+
+
+# ------------------------------------------------------ section decoding --
+
+_READ = 8 << 20  # streaming read size
+
+
+class _Slice:
+    """Bounded read-only file-like over the next ``length`` bytes of an
+    open binary file. Every section decoder reads through one, so none can
+    wander into the next fsimage section. Implements just what
+    :func:`pyarrow.input_stream` needs to wrap a raw Python stream
+    (read/readable/closed/close); closing it leaves the file open."""
+
+    def __init__(self, f: BinaryIO, length: int) -> None:
+        self._f = f
+        self.remaining = length
+        self.closed = False
+
+    def readable(self) -> bool:
+        return True
+
+    def writable(self) -> bool:
+        return False
+
+    def seekable(self) -> bool:
+        return False
+
+    def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0 or n > self.remaining:
+            n = self.remaining
+        data = self._f.read(n) if n else b""
+        self.remaining -= len(data)
+        return data
+
+    def close(self) -> None:
+        self.closed = True
+
+
+def _copy(src, write: Callable[[bytes], object]) -> int:
+    n = 0
+    while block := src.read(_READ):
+        write(block)
+        n += len(block)
+    return n
 
 
 def _snappy_chunk_size(chunk: bytes) -> int:
@@ -242,19 +297,9 @@ def _lz4_chunk_size(chunk: bytes) -> int:
     return total
 
 
-def _chunk_decompressed_size(arrow_codec: str, chunk: bytes) -> int:
-    return (
-        _snappy_chunk_size(chunk)
-        if arrow_codec == "snappy"
-        else _lz4_chunk_size(chunk)
-    )
-
-
-def _block_stream_decompress(data: bytes, arrow_codec: str) -> bytes:
+def _block_stream(src: _Slice, write: Callable[[bytes], object], codec: str) -> int:
     """Hadoop BlockCompressorStream framing — what Lz4Codec and
-    SnappyCodec's ``createInputStream`` expects (the reference accepts
-    any factory codec via ``FSImageUtil.wrapInputStreamForCompression``,
-    `lib/.../core/FsImageLoader.java:268`): repeated blocks of
+    SnappyCodec's ``createInputStream`` expects: repeated blocks of
     ``[origBlockSize int32-BE] [chunkLen int32-BE] [chunk bytes]…``,
     chunks repeating until the block's ``origBlockSize`` bytes are
     produced. Chunk payloads are the codec's RAW block format (no frame
@@ -262,120 +307,190 @@ def _block_stream_decompress(data: bytes, arrow_codec: str) -> bytes:
     clean-room LZO1X decoder (``extract/lzo.py``) for the hadoop-lzo
     plugin's ``LzoCodec`` (same BlockCompressorStream framing).
 
-    Each chunk is decompressed at its EXACT size, derived from the
-    chunk bytes themselves (:func:`_chunk_decompressed_size`): pyarrow
-    requires the size up front, and padding it with ``orig - produced``
-    is only correct for single-chunk blocks — for a multi-chunk block
-    it silently appends garbage (the writer↔reader blind spot the r8
-    judge flagged; pinned by tests/test_codec_vectors.py)."""
-    if arrow_codec == "lzo":
-        c = None
+    Each lz4/snappy chunk is decompressed at its EXACT size, derived from
+    the chunk bytes themselves: pyarrow requires the size up front, and
+    padding it with ``orig - produced`` is only correct for single-chunk
+    blocks — for a multi-chunk block it silently appends garbage (pinned
+    by tests/test_codec_vectors.py). Either way a chunk that would
+    decompress past its block raises before its output is made."""
+    if codec == "lzo":
+        from hfsa_spark.extract.lzo import lzo1x_decompress
+
+        # max_size aborts mid-decode: a run-length-extended instruction
+        # can expand ~255x, so cap BEFORE the copy
+        def decode(chunk: bytes, room: int) -> bytes:
+            return lzo1x_decompress(chunk, max_size=room)
     else:
         import pyarrow as pa
 
-        c = pa.Codec(arrow_codec)
-    out = bytearray()
-    pos, n = 0, len(data)
-    while pos + 4 <= n:
-        (orig,) = struct.unpack_from(">i", data, pos)
-        pos += 4
+        c = pa.Codec(codec)
+        chunk_size = _snappy_chunk_size if codec == "snappy" else _lz4_chunk_size
+
+        def decode(chunk: bytes, room: int) -> bytes:
+            size = chunk_size(chunk)
+            if size > room:
+                raise ValueError(
+                    f"corrupt {codec} block stream: chunk decompresses"
+                    " past its block"
+                )
+            return c.decompress(chunk, decompressed_size=size, asbytes=True)
+
+    pos = 0
+
+    def take(n: int) -> bytes:
+        nonlocal pos
+        data = src.read(n)
+        if len(data) != n:
+            raise ValueError(f"truncated {codec} block stream at offset {pos}")
+        pos += n
+        return data
+
+    total = 0
+    while src.remaining:
+        (orig,) = struct.unpack(">i", take(4))
+        if orig < 0:
+            raise ValueError(
+                f"corrupt {codec} block stream: block length {orig}"
+                f" at offset {pos - 4}"
+            )
         produced = 0
         while produced < orig:
-            if pos + 4 > n:
+            (clen,) = struct.unpack(">i", take(4))
+            if clen < 0:
                 raise ValueError(
-                    f"truncated {arrow_codec} block stream at offset {pos}"
-                )
-            (clen,) = struct.unpack_from(">i", data, pos)
-            pos += 4
-            if clen < 0 or pos + clen > n:
-                raise ValueError(
-                    f"truncated {arrow_codec} block stream at offset {pos}"
+                    f"truncated {codec} block stream at offset {pos}"
                     f" (chunk length {clen})"
                 )
-            chunk = data[pos : pos + clen]
-            if c is None:  # lzo: our decoder discovers the size itself
-                from hfsa_spark.extract.lzo import lzo1x_decompress
-
-                # max_size aborts mid-decode: a run-length-extended
-                # instruction can expand ~255x, so cap BEFORE the copy
-                dec = lzo1x_decompress(chunk, max_size=orig - produced)
-                if produced + len(dec) > orig:
-                    raise ValueError(
-                        f"corrupt {arrow_codec} block stream: chunk at"
-                        f" offset {pos} decompresses past its block"
-                    )
-            else:
-                expect = _chunk_decompressed_size(arrow_codec, chunk)
-                if produced + expect > orig:
-                    raise ValueError(
-                        f"corrupt {arrow_codec} block stream: chunk at offset"
-                        f" {pos} decompresses past its block"
-                    )
-                dec = c.decompress(
-                    chunk, decompressed_size=expect, asbytes=True
-                )
-            pos += clen
+            dec = decode(take(clen), orig - produced)
+            write(dec)
             produced += len(dec)
-            out += dec
-    return bytes(out)
+        total += orig
+    return total
 
 
-def _decompress(codec: str, data: bytes) -> bytes:
-    """Accept-anything codec dispatch matching Hadoop's factory set
+def _inflate_members(
+    src: _Slice, write: Callable[[bytes], object], new, codec: str
+) -> int:
+    """Stream codecs (gzip, zlib, bzip2): decode concatenated streams,
+    each through a fresh ``new()`` decompressor, until the section ends.
+    Bytes after a stream's end marker must start another stream (the
+    decompressor raises on anything else); a section that ends inside a
+    stream raises here."""
+    d, n = None, 0
+    while block := src.read(_READ):
+        while block:
+            if d is None:
+                d = new()
+            out = d.decompress(block)
+            write(out)
+            n += len(out)
+            block = b""
+            if d.eof:
+                block, d = d.unused_data, None
+    if d is not None:
+        raise ValueError(
+            f"truncated {codec} section: it ends before its end-of-stream marker"
+        )
+    return n
+
+
+def _decompress_stream(
+    f: BinaryIO, length: int, write: Callable[[bytes], object], codec: str
+) -> int:
+    """The one codec dispatch: decode the section in the next ``length``
+    bytes of ``f`` through ``codec`` (the footer's Hadoop codec class
+    name, "" for none), emitting the output through ``write``; returns
+    the output byte count. Accept-anything set matching Hadoop's factory
     (`FsImageLoader.java:268`): Gzip, Default (zlib), Lz4, Snappy,
     BZip2, ZStandard — plus the hadoop-lzo plugin's LzoCodec via a
     clean-room LZO1X decoder written from the public stream format
     (``extract/lzo.py``; no GPL code used or linked) and its LzopCodec
     via the lzop FILE-format container on the same decoder
-    (``extract/lzop.py``). That completes the factory-resolvable set."""
-    if not codec:
-        return data
-    lower = codec.rsplit(".", 1)[-1].lower()  # class-name tail
-    if "gzip" in lower:
-        return gzip.decompress(data)
-    if "default" in lower:  # DefaultCodec = zlib-framed deflate
-        return zlib.decompress(data)
-    if "lzop" in lower:  # hadoop-lzo LzopCodec: lzop file framing + LZO1X
-        from hfsa_spark.extract.lzop import lzop_decompress
+    (``extract/lzop.py``).
 
-        return lzop_decompress(data)
-    if "lzo" in lower:  # hadoop-lzo LzoCodec: BlockCompressorStream + LZO1X
-        return _block_stream_decompress(data, "lzo")
-    if "lz4" in lower:
-        return _block_stream_decompress(data, "lz4_raw")
-    if "snappy" in lower:
-        return _block_stream_decompress(data, "snappy")
-    if "bzip2" in lower:  # BZip2Codec writes a standard .bz2 stream
+    Strict about where a section ends, for every codec: a section that
+    ends before its end-of-stream marker raises; concatenated gzip
+    members, zlib, bzip2 and zstd streams are all decoded (as Java's
+    GZIPInputStream does); bytes after the last stream that do not start
+    another stream raise, and so does a section the codec leaves
+    unconsumed. Compat risk: the reference wraps a bounded stream in the
+    codec and never requires the codec to drain it — a real image whose
+    section carried slack after its end marker would be rejected here.
+    Kept strict deliberately until a real-image corpus shows such slack.
+    """
+    lower = codec.rsplit(".", 1)[-1].lower()  # class-name tail
+    src = _Slice(f, length)
+    if not codec:
+        n = _copy(src, write)
+    elif "gzip" in lower:
+        n = _inflate_members(src, write, lambda: zlib.decompressobj(wbits=31), lower)
+    elif "default" in lower:  # DefaultCodec = zlib-framed deflate
+        n = _inflate_members(src, write, zlib.decompressobj, lower)
+    elif "lzop" in lower:  # hadoop-lzo LzopCodec: lzop file framing + LZO1X
+        from hfsa_spark.extract.lzop import lzop_decompress_file
+
+        # the lzop container is self-delimiting (0-length end block) and
+        # the reader holds one ≤64 MiB block at a time
+        n = lzop_decompress_file(src, write)
+    elif "lzo" in lower:  # hadoop-lzo LzoCodec: BlockCompressorStream + LZO1X
+        n = _block_stream(src, write, "lzo")
+    elif "lz4" in lower:
+        n = _block_stream(src, write, "lz4_raw")
+    elif "snappy" in lower:
+        n = _block_stream(src, write, "snappy")
+    elif "bzip2" in lower:  # BZip2Codec writes a standard .bz2 stream
         import bz2
 
-        return bz2.decompress(data)
-    if "zstandard" in lower or "zstd" in lower:  # standard zstd frames
+        n = _inflate_members(src, write, bz2.BZ2Decompressor, lower)
+    elif "zstandard" in lower or "zstd" in lower:  # standard zstd frames
         import pyarrow as pa
 
-        stream = pa.input_stream(pa.BufferReader(data), compression="zstd")
-        return stream.read()
-    raise ValueError(f"unsupported fsimage codec: {codec}")
+        # pyarrow has no incremental zstd decompressor object; its
+        # input_stream decodes concatenated frames and raises on a
+        # truncated frame or on trailing bytes
+        n = _copy(pa.input_stream(src, compression="zstd"), write)
+    else:
+        raise ValueError(f"unsupported fsimage codec: {codec}")
+    if src.remaining:
+        raise ValueError(
+            f"corrupt {lower or 'uncompressed'} section: consumed"
+            f" {length - src.remaining} of {length} section bytes"
+        )
+    return n
 
 
-def _section_bytes(raw: bytes, codec: str, sections: list[_Section], name: str) -> bytes:
+def _decompress(codec: str, data: bytes) -> bytes:
+    """One whole in-memory section through :func:`_decompress_stream`."""
+    if not codec:
+        return data
+    out = bytearray()
+    _decompress_stream(io.BytesIO(data), len(data), out.extend, codec)
+    return bytes(out)
+
+
+def _read_section(path: str, codec: str, sections: list[_Section], name: str) -> bytes:
+    """Read + decompress ONE section by seeking."""
     for s in sections:
         if s.name == name:
-            return _decompress(codec, raw[s.offset : s.offset + s.length])
+            with open(path, "rb") as f:
+                f.seek(s.offset)
+                return _decompress(codec, f.read(s.length))
     raise KeyError(f"no section {name} in fsimage (have {[s.name for s in sections]})")
 
 
+# ------------------------------------------------------- message decoding --
+
+
 def _parse_string_table(data: bytes) -> _StringTable:
-    reader = _DelimitedReader(data)
-    header = reader.next_message()
+    msgs = _messages(data)
     num_entry, mask_bits = 0, 0
-    for fno, val in _iter_fields(header):
+    for fno, val in _iter_fields(next(msgs)):
         if fno == 1:
             num_entry = val
         elif fno == 2:
             mask_bits = val
     table = _StringTable(mask_bits=mask_bits)
-    for _ in range(num_entry):
-        msg = reader.next_message()
+    for msg in islice(msgs, num_entry):
         sid, text = 0, ""
         for fno, val in _iter_fields(msg):
             if fno == 1:
@@ -387,9 +502,8 @@ def _parse_string_table(data: bytes) -> _StringTable:
 
 
 def _parse_inode_references(data: bytes) -> list[int]:
-    reader = _DelimitedReader(data)
     refs: list[int] = []
-    while (msg := reader.next_message()) is not None:
+    for msg in _messages(data):
         referred = 0
         for fno, val in _iter_fields(msg):
             if fno == 1:
@@ -398,23 +512,41 @@ def _parse_inode_references(data: bytes) -> list[int]:
     return refs
 
 
-def _parse_dir_section(data: bytes, ref_ids: list[int]) -> dict[int, list[int]]:
-    """parent id → child inode ids; refChildren resolved through the
-    reference table (FsImageLoader.java:315-340 semantics)."""
-    reader = _DelimitedReader(data)
-    dir_map: dict[int, list[int]] = {}
-    while (msg := reader.next_message()) is not None:
-        parent = 0
-        children: list[int] = []
-        for fno, val in _iter_fields(msg):
-            if fno == 1:
-                parent = val
-            elif fno == 2:
-                children.extend(_packed_varints(val))
-            elif fno == 3:
-                children.extend(ref_ids[r] for r in _packed_varints(val))
-        dir_map[parent] = children
-    return dir_map
+def _read_tables(
+    path: str, codec: str, sections: list[_Section]
+) -> tuple[_StringTable, list[int]]:
+    """The small sections both schedules decode on the driver: the string
+    table and the INODE_REFERENCE ids (absent in images without
+    snapshots or renames)."""
+    table = _parse_string_table(_read_section(path, codec, sections, "STRING_TABLE"))
+    try:
+        ref_ids = _parse_inode_references(
+            _read_section(path, codec, sections, "INODE_REFERENCE")
+        )
+    except KeyError:
+        ref_ids = []
+    return table, ref_ids
+
+
+def _parse_dir_entry(msg: bytes, ref_ids: list[int]) -> tuple[int, list[int]]:
+    """One INODE_DIR message → (parent id, child inode ids); refChildren
+    resolved through the reference table (FsImageLoader.java:315-340
+    semantics)."""
+    parent = 0
+    children: list[int] = []
+    for fno, val in _iter_fields(msg):
+        if fno == 1:
+            parent = val
+        elif fno == 2:
+            children.extend(_packed_varints(val))
+        elif fno == 3:
+            children.extend(ref_ids[r] for r in _packed_varints(val))
+    return parent, children
+
+
+def _num_inodes(header: bytes) -> int:
+    """numInodes of the INODE section header {lastInodeId, numInodes}."""
+    return next((val for fno, val in _iter_fields(header) if fno == 2), 0)
 
 
 # ACL entry packing (public Hadoop FSImageFormatPBINode layout): bits 0-2
@@ -559,40 +691,21 @@ def _parse_inode(msg: bytes, table: _StringTable) -> dict:
 
 def parse_fsimage(path: str) -> list[dict]:
     """Parse an fsimage file into raw inode row dicts with ``parent_id``
-    wired from the directory section (paths NOT yet materialized)."""
-    with open(path, "rb") as f:
-        raw = f.read()
-    codec, sections = _parse_file_summary(raw)
-
-    table = _parse_string_table(_section_bytes(raw, codec, sections, "STRING_TABLE"))
-    try:
-        ref_ids = _parse_inode_references(
-            _section_bytes(raw, codec, sections, "INODE_REFERENCE")
-        )
-    except KeyError:
-        ref_ids = []
-    dir_map = _parse_dir_section(
-        _section_bytes(raw, codec, sections, "INODE_DIR"), ref_ids
-    )
-
-    inode_data = _section_bytes(raw, codec, sections, "INODE")
-    reader = _DelimitedReader(inode_data)
-    header = reader.next_message()  # INodeSection {lastInodeId, numInodes}
-    num_inodes = 0
-    for fno, val in _iter_fields(header):
-        if fno == 2:
-            num_inodes = val
+    wired from the directory section (paths NOT yet materialized) — the
+    driver schedule: each section read by seek, decoded in one pass."""
+    codec, sections = _read_footer(path)
+    table, ref_ids = _read_tables(path, codec, sections)
 
     parent_of: dict[int, int] = {}
-    for parent, children in dir_map.items():
+    for msg in _messages(_read_section(path, codec, sections, "INODE_DIR")):
+        parent, children = _parse_dir_entry(msg, ref_ids)
         for c in children:
             parent_of[c] = parent
 
+    msgs = _messages(_read_section(path, codec, sections, "INODE"))
+    num_inodes = _num_inodes(next(msgs))
     rows = []
-    for _ in range(num_inodes):
-        msg = reader.next_message()
-        if msg is None:
-            break
+    for msg in islice(msgs, num_inodes):
         row = _parse_inode(msg, table)
         row["parent_id"] = parent_of.get(row["id"])
         rows.append(row)
@@ -601,95 +714,8 @@ def parse_fsimage(path: str) -> list[dict]:
 
 # ------------------------------------------------- distributed decoding --
 
-
-def _read_footer(path: str) -> tuple[str, list[_Section]]:
-    """Parse codec + section index from the FileSummary footer by reading
-    only the file head (magic) and tail — no full-image read."""
-    with open(path, "rb") as f:
-        if f.read(len(MAGIC)) != MAGIC:
-            raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
-        f.seek(-4, os.SEEK_END)
-        end = f.tell()
-        (summary_len,) = struct.unpack(">i", f.read(4))
-        f.seek(end - summary_len)
-        summary = f.read(summary_len)
-    reader = _DelimitedReader(summary)
-    msg = reader.next_message()
-    codec = ""
-    sections: list[_Section] = []
-    for fno, val in _iter_fields(msg):
-        if fno == 3:
-            codec = val.decode("utf-8")
-        elif fno == 4:
-            name, length, offset = "", 0, 0
-            for sfno, sval in _iter_fields(val):
-                if sfno == 1:
-                    name = sval.decode("utf-8")
-                elif sfno == 2:
-                    length = sval
-                elif sfno == 3:
-                    offset = sval
-            sections.append(_Section(name, length, offset))
-    return codec, sections
-
-
-def _read_section(path: str, codec: str, sections: list[_Section], name: str) -> bytes:
-    """Read + decompress ONE section by seeking — for the small sections
-    (STRING_TABLE, INODE_REFERENCE, the INODE header) only."""
-    for s in sections:
-        if s.name == name:
-            with open(path, "rb") as f:
-                f.seek(s.offset)
-                return _decompress(codec, f.read(s.length))
-    raise KeyError(f"no section {name} in fsimage (have {[s.name for s in sections]})")
-
-
-class _FileSlice:
-    """Bounded read-only file-like over ``[offset, offset+length)`` of a
-    file — the input side of the constant-memory streaming decompress.
-    Implements just what :func:`pyarrow.input_stream` needs to wrap a
-    raw Python stream (read/readable/closed/close); never reads past
-    the slice end, so a decompressor fed from it cannot wander into the
-    next fsimage section."""
-
-    def __init__(self, path: str, offset: int, length: int) -> None:
-        self._f = open(path, "rb")
-        self._f.seek(offset)
-        self._remaining = length
-        self.closed = False
-
-    def readable(self) -> bool:
-        return True
-
-    def writable(self) -> bool:
-        return False
-
-    def seekable(self) -> bool:
-        return False
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0 or n > self._remaining:
-            n = self._remaining
-        if n == 0:
-            return b""
-        data = self._f.read(n)
-        self._remaining -= len(data)
-        return data
-
-    def close(self) -> None:
-        if not self.closed:
-            self._f.close()
-            self.closed = True
-
-
-def _lzo_parallel_min() -> int:
-    """Section size above which LZO decode goes block-parallel
-    (default 32 MiB; env-overridable so tests can exercise the path
-    on small fixtures)."""
-    try:
-        return int(os.environ.get("HFSA_LZO_PARALLEL_MIN", 32 << 20))
-    except ValueError:
-        return 32 << 20
+# Section size above which LZO decode goes block-parallel.
+_LZO_PARALLEL_MIN = 32 << 20
 
 
 def _scan_lzo_block_stream(
@@ -804,48 +830,11 @@ def _decompress_lzo_to_file_parallel(
 def _decompress_to_file(
     src: str, offset: int, length: int, dst, codec: str = ""
 ) -> int:
-    """Streaming decompress (constant memory) of a compressed section
-    into an open scratch file; returns decompressed byte count. Same
-    codec set as :func:`_decompress`; gzip/Default go through one zlib
-    decompressobj (wbits=47 auto-detects both framings), the block
-    codecs stream block-by-block, bzip2/zstd through their incremental
-    decompressors."""
-    lower = codec.rsplit(".", 1)[-1].lower() if codec else ""
-    written = 0
-    if "lzop" in lower:
-        from hfsa_spark.extract.lzop import lzop_decompress_file
-
-        with open(src, "rb") as f:
-            f.seek(offset)
-            # the lzop container is self-delimiting (0-length end block)
-            # and the streaming reader holds one ≤64 MiB block at a time
-            def sink(chunk: bytes) -> None:
-                nonlocal written
-                dst.write(chunk)
-                written += len(chunk)
-
-            lzop_decompress_file(f, sink)
-            consumed = f.tell() - offset
-            if consumed != length:
-                # exact consumption, both directions: an over-run means the
-                # container escaped the section; an under-run means trailing
-                # section bytes the parser never looked at (same strict
-                # leftover contract as the other block codecs).
-                # Compat risk (ADVICE r11): the reference loader wraps a
-                # bounded stream in the codec and never requires the codec
-                # to drain it (FsImageLoader.java:268) — a real
-                # hadoop-lzo-written image whose lzop section carried slack
-                # after the end marker would be rejected here. Kept strict
-                # deliberately; if a real-image lzop corpus ever becomes
-                # available, verify sections are byte-exact there before
-                # relaxing.
-                raise ValueError(
-                    f"corrupt lzop section: container consumed {consumed}"
-                    f" of {length} section bytes"
-                )
-        return written
-    is_lzo = "lzo" in lower
-    if is_lzo and length >= _lzo_parallel_min():
+    """Streaming decompress (constant memory) of one section of ``src``
+    into an open scratch file through :func:`_decompress_stream`; returns
+    the decompressed byte count."""
+    lower = codec.rsplit(".", 1)[-1].lower()
+    if "lzo" in lower and "lzop" not in lower and length >= _LZO_PARALLEL_MIN:
         # pure-Python LZO1X decodes at ~14 MB/s on instruction-dense
         # streams (extract/lzo.py docstring) — a multi-GB section would
         # stall the driver for minutes on the sequential path. Decode
@@ -855,101 +844,9 @@ def _decompress_to_file(
         done = _decompress_lzo_to_file_parallel(src, offset, length, dst)
         if done is not None:
             return done
-    if "lz4" in lower or "snappy" in lower or is_lzo:
-        if is_lzo:
-            c = None
-        else:
-            import pyarrow as pa
-
-            c = pa.Codec("lz4_raw" if "lz4" in lower else "snappy")
-        with open(src, "rb") as f:
-            f.seek(offset)
-            end = offset + length
-            while f.tell() + 4 <= end:
-                (orig,) = struct.unpack(">i", f.read(4))
-                produced = 0
-                while produced < orig:
-                    # every inner read stays inside the section: a
-                    # truncated/corrupt section must raise the same
-                    # clear error as _block_stream_decompress, not
-                    # read into the NEXT section and return garbage
-                    if f.tell() + 4 > end:
-                        raise ValueError(
-                            f"truncated {lower} block stream at offset"
-                            f" {f.tell() - offset}"
-                        )
-                    (clen,) = struct.unpack(">i", f.read(4))
-                    if clen < 0 or f.tell() + clen > end:
-                        raise ValueError(
-                            f"truncated {lower} block stream at offset"
-                            f" {f.tell() - offset} (chunk length {clen})"
-                        )
-                    chunk = f.read(clen)
-                    if c is None:  # lzo discovers its own size
-                        from hfsa_spark.extract.lzo import lzo1x_decompress
-
-                        dec = lzo1x_decompress(chunk, max_size=orig - produced)
-                        if produced + len(dec) > orig:
-                            raise ValueError(
-                                f"corrupt {lower} block stream: chunk at"
-                                f" offset {f.tell() - offset - clen}"
-                                " decompresses past its block"
-                            )
-                    else:
-                        arrow = "lz4_raw" if "lz4" in lower else "snappy"
-                        expect = _chunk_decompressed_size(arrow, chunk)
-                        if produced + expect > orig:
-                            raise ValueError(
-                                f"corrupt {lower} block stream: chunk at"
-                                f" offset {f.tell() - offset - clen}"
-                                " decompresses past its block"
-                            )
-                        dec = c.decompress(
-                            chunk, decompressed_size=expect, asbytes=True
-                        )
-                    produced += len(dec)
-                    dst.write(dec)
-                    written += len(dec)
-        return written
-    if "bzip2" in lower:
-        import bz2
-
-        d = bz2.BZ2Decompressor()
-        decomp, flush = d.decompress, lambda: b""
-    elif "zstandard" in lower or "zstd" in lower:
-        import pyarrow as pa
-
-        # pyarrow has no incremental zstd decompressor object; feed its
-        # input_stream wrapper from a BOUNDED file slice so neither the
-        # compressed nor the decompressed section is ever materialized
-        # — constant memory, matching this function's contract
-        stream = pa.input_stream(
-            _FileSlice(src, offset, length), compression="zstd"
-        )
-        while True:
-            out = stream.read(8 << 20)
-            if not out:
-                break
-            dst.write(out)
-            written += len(out)
-        return written
-    else:
-        d = zlib.decompressobj(wbits=47)
-        decomp, flush = d.decompress, lambda: d.flush()
     with open(src, "rb") as f:
         f.seek(offset)
-        remaining = length
-        while remaining > 0:
-            block = f.read(min(8 << 20, remaining))
-            if not block:
-                break
-            remaining -= len(block)
-            out = decomp(block)
-            dst.write(out)
-            written += len(out)
-    tail = flush()
-    dst.write(tail)
-    return written + len(tail)
+        return _decompress_stream(f, length, dst.write, codec)
 
 
 def _scan_chunks(
@@ -1023,6 +920,14 @@ def _materialize_big_sections(
     return scratch, spans
 
 
+def _chunk_messages(spec) -> Iterator[bytes]:
+    """The messages of one (data_path, offset, length, n_msgs) chunk spec."""
+    with open(spec.data_path, "rb") as f:
+        f.seek(spec.offset)
+        data = f.read(spec.length)
+    return islice(_messages(data), int(spec.n_msgs))
+
+
 def _decode_inode_chunks(table: _StringTable):
     """mapInPandas decoder: (data_path, offset, length, n_msgs) chunk specs
     → raw inode rows. Runs on executors; ``table`` rides the closure
@@ -1034,24 +939,14 @@ def _decode_inode_chunks(table: _StringTable):
     def decode(batches):
         for pdf in batches:
             for spec in pdf.itertuples(index=False):
-                with open(spec.data_path, "rb") as f:
-                    f.seek(spec.offset)
-                    data = f.read(spec.length)
-                reader = _DelimitedReader(data)
                 rows = []
-                for _ in range(int(spec.n_msgs)):
-                    msg = reader.next_message()
-                    if msg is None:
-                        break
+                for msg in _chunk_messages(spec):
                     r = _parse_inode(msg, table)
-                    r["blocks"] = (
-                        None
-                        if r["blocks"] is None
-                        else [
+                    if r["blocks"] is not None:
+                        r["blocks"] = [
                             {"block_id": b[0], "gen_stamp": b[1], "num_bytes": b[2]}
                             for b in r["blocks"]
                         ]
-                    )
                     rows.append(tuple(r[c] for c in cols))
                 yield pd.DataFrame(rows, columns=cols)
 
@@ -1066,25 +961,10 @@ def _decode_edge_chunks(ref_ids: list[int]):
     def decode(batches):
         for pdf in batches:
             for spec in pdf.itertuples(index=False):
-                with open(spec.data_path, "rb") as f:
-                    f.seek(spec.offset)
-                    data = f.read(spec.length)
-                reader = _DelimitedReader(data)
                 parents: list[int] = []
                 children: list[int] = []
-                for _ in range(int(spec.n_msgs)):
-                    msg = reader.next_message()
-                    if msg is None:
-                        break
-                    parent = 0
-                    kids: list[int] = []
-                    for fno, val in _iter_fields(msg):
-                        if fno == 1:
-                            parent = val
-                        elif fno == 2:
-                            kids.extend(_packed_varints(val))
-                        elif fno == 3:
-                            kids.extend(ref_ids[r] for r in _packed_varints(val))
+                for msg in _chunk_messages(spec):
+                    parent, kids = _parse_dir_entry(msg, ref_ids)
                     parents.extend([parent] * len(kids))
                     children.extend(kids)
                 yield pd.DataFrame({"parent_id": parents, "id": children})
@@ -1107,14 +987,7 @@ def load_fsimage_distributed(
     floored at 4 MiB so a huge cluster doesn't shred a small image, capped
     at 128 MiB so one task's bytes always fit executor memory."""
     codec, sections = _read_footer(path)
-
-    table = _parse_string_table(_read_section(path, codec, sections, "STRING_TABLE"))
-    try:
-        ref_ids = _parse_inode_references(
-            _read_section(path, codec, sections, "INODE_REFERENCE")
-        )
-    except KeyError:
-        ref_ids = []
+    table, ref_ids = _read_tables(path, codec, sections)
 
     data_path, spans = _materialize_big_sections(
         path, codec, sections, ["INODE", "INODE_DIR"], scratch_dir
@@ -1132,10 +1005,7 @@ def load_fsimage_distributed(
     try:
         ino_off, ino_len = spans["INODE"]
         header_len, body_start = _read_varint(mv, ino_off)
-        num_inodes = 0
-        for fno, val in _iter_fields(bytes(mv[body_start : body_start + header_len])):
-            if fno == 2:
-                num_inodes = val
+        num_inodes = _num_inodes(bytes(mv[body_start : body_start + header_len]))
         inode_chunks = _scan_chunks(
             mv, body_start + header_len, ino_off + ino_len,
             target_chunk_bytes, max_msgs=num_inodes,

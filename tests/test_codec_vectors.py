@@ -30,16 +30,15 @@ vectors pin the byte-level contract that acceptance implies.
 from __future__ import annotations
 
 import bz2
+import gzip
+import hashlib
 import struct
+import zlib
 
 import pyarrow as pa
 import pytest
 
-from hfsa_spark.extract.fsimage import (
-    _block_stream_decompress,
-    _decompress,
-    _decompress_to_file,
-)
+from hfsa_spark.extract.fsimage import _decompress, _decompress_to_file
 
 
 def _chunk(codec: str, raw: bytes) -> bytes:
@@ -62,13 +61,15 @@ VECTORS = {
     "SnappyCodec": "snappy",
 }
 
+HADOOP = "org.apache.hadoop.io.compress."  # package of the factory codecs
+
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
 def test_single_block_single_chunk(cls, arrow):
     payload = b"hello fsimage section " * 40
     stream = _block(arrow, [payload])
     assert _decompress(cls, stream) == payload
-    assert _block_stream_decompress(stream, arrow) == payload
+    assert _decompress(HADOOP + cls, stream) == payload
 
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
@@ -151,4 +152,53 @@ def test_truncated_vector_raises_not_wanders():
     the in-memory decoder's bound check, vector-pinned."""
     stream = _block("lz4_raw", [b"Z" * 4096])
     with pytest.raises(ValueError, match="truncated"):
-        _block_stream_decompress(stream[:-10] , "lz4_raw")
+        _decompress(HADOOP + "Lz4Codec", stream[:-10])
+
+
+# ------------------------------------------ where a stream section ends --
+# gzip / Default / bzip2 sections are standard streams from the stdlib
+# encoders. Java's GZIPInputStream (and Hadoop's DecompressorStream)
+# read concatenated streams to the end of the section, and a stream cut
+# before its end-of-stream marker is an error, never short output.
+
+_A = b"".join(b"/user/a/part-%05d\n" % i for i in range(2000))
+_B = hashlib.shake_256(b"second member").digest(20000)
+
+STREAM_SECTIONS = {
+    # name: (codec class tail, section bytes, decoded bytes or None = raises)
+    "gzip-truncated": ("GzipCodec", gzip.compress(_A + _B)[:-20], None),
+    "default-truncated": ("DefaultCodec", zlib.compress(_A + _B)[:-20], None),
+    "bzip2-truncated": ("BZip2Codec", bz2.compress(_A + _B)[:-20], None),
+    "gzip-two-members": ("GzipCodec", gzip.compress(_A) + gzip.compress(_B), _A + _B),
+    "bzip2-two-streams": ("BZip2Codec", bz2.compress(_A) + bz2.compress(_B), _A + _B),
+    "default-trailing-junk": ("DefaultCodec", zlib.compress(_A) + b"JUNK", None),
+}
+
+
+def _to_file(tmp_path, cls, section):
+    """_decompress_to_file over the section embedded between foreign bytes."""
+    img = tmp_path / "img.bin"
+    img.write_bytes(b"HDFSIMG1" + section + b"NEXT_SECTION")
+    out = tmp_path / "out.bin"
+    with open(out, "wb") as dst:
+        n = _decompress_to_file(str(img), 8, len(section), dst, codec=HADOOP + cls)
+    data = out.read_bytes()
+    assert n == len(data)
+    return data
+
+
+@pytest.mark.parametrize("reader", ["memory", "file"])
+@pytest.mark.parametrize("name", sorted(STREAM_SECTIONS))
+def test_stream_section_end(name, reader, tmp_path):
+    cls, section, want = STREAM_SECTIONS[name]
+    if reader == "memory":
+        def decode():
+            return _decompress(HADOOP + cls, section)
+    else:
+        def decode():
+            return _to_file(tmp_path, cls, section)
+    if want is None:
+        with pytest.raises((ValueError, OSError, zlib.error)):
+            decode()
+    else:
+        assert decode() == want

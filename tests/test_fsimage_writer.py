@@ -86,12 +86,54 @@ def test_streaming_writer_matches_buffered(tmp_path):
     assert open(buffered, "rb").read() == open(streamed, "rb").read()
 
 
-@pytest.mark.parametrize("codec", ["gzip", "lz4", "snappy", "zstd", "lzo", "lzop"])
-def test_written_image_distributed_load(spark, tmp_path, codec):
-    """A writer-produced compressed image must load identically through the
+def _written_tree() -> list[dict]:
+    """A small namespace built here, not read from a fixture: a root, two
+    levels of directories, files with 0-2 blocks, an ACL and a symlink."""
+    rows = [{"id": 16385, "parent_id": None, "name": "", "type": "DIRECTORY",
+             "user": "hdfs", "group": "supergroup", "mode": 0o755, "mtime": 1}]
+    nid = 16386
+    for d in range(4):
+        top = nid
+        rows.append({"id": top, "parent_id": 16385, "name": f"d{d}",
+                     "type": "DIRECTORY", "user": f"u{d % 3}", "group": "g",
+                     "mode": 0o750, "mtime": 10 + d, "ns_quota": 100 * d or -1})
+        nid += 1
+        for s in range(3):
+            sub = nid
+            rows.append({"id": sub, "parent_id": top, "name": f"s{s}",
+                         "type": "DIRECTORY", "user": f"u{s}", "group": "g",
+                         "mode": 0o755, "mtime": 20 + s})
+            nid += 1
+            for f in range(8):
+                rows.append({
+                    "id": nid, "parent_id": sub, "name": f"f{f}.dat",
+                    "type": "FILE", "user": f"u{f % 4}", "group": f"g{f % 2}",
+                    "mode": 0o644, "mtime": 30 + f, "atime": 40 + f,
+                    "replication": 1 + f % 3, "preferred_block_size": 1 << 20,
+                    "blocks": [(nid * 10 + b, 1000 + b, 4096 * (f + 1))
+                               for b in range(f % 3)],
+                    "acl": ["user:u1:rw-"] if f == 7 else [],
+                })
+                nid += 1
+    rows.append({"id": nid, "parent_id": 16386, "name": "link",
+                 "type": "SYMLINK", "user": "u0", "group": "g", "mode": 0o777,
+                 "mtime": 50, "atime": 50, "symlink_target": "/d1/s0"})
+    return rows
+
+
+@pytest.mark.parametrize("source", ["fsi_small_h3_2", "written"])
+@pytest.mark.parametrize(
+    "codec",
+    [None, "default", "gzip", "bzip2", "lz4", "snappy", "zstd", "lzo", "lzop"],
+)
+def test_written_image_distributed_load(spark, tmp_path, codec, source):
+    """A writer-produced image must load identically through the
     driver-side and executor-parallel decode paths (the latter exercises
     the streaming scratch-file decompress per codec)."""
-    src = parse_fsimage(f"{LIB_RES}/fsi_small_h3_2.img")
+    if source == "written":
+        src = _written_tree()
+    else:
+        src = parse_fsimage(f"{LIB_RES}/{source}.img")
     out = str(tmp_path / f"dist_{codec}.img")
     write_fsimage(out, src, codec=codec)
     a = load_fsimage(spark, out, distributed=False)

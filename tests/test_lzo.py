@@ -173,15 +173,15 @@ def test_max_size_cap_aborts_before_materializing():
 
 def test_block_stream_oversize_lzo_chunk_aborts_early():
     # frame a chunk whose payload expands past the block header's size:
-    # _block_stream_decompress must reject via the in-decoder cap
+    # the LzoCodec section reader must reject via the in-decoder cap
     import struct
 
-    from hfsa_spark.extract.fsimage import _block_stream_decompress
+    from hfsa_spark.extract.fsimage import _decompress
 
     payload = lzo1x_compress_greedy(b"z" * 4096)
     frame = struct.pack(">i", 16) + struct.pack(">i", len(payload)) + payload
     with pytest.raises(ValueError, match="byte cap|past its block"):
-        _block_stream_decompress(frame, "lzo")
+        _decompress("com.hadoop.compression.lzo.LzoCodec", frame)
 
 
 # ----------------------- differential vs a real LZO implementation --
@@ -291,6 +291,7 @@ def test_parallel_lzo_section_matches_sequential(tmp_path, monkeypatch):
     import hashlib
     import io
 
+    from hfsa_spark.extract import fsimage
     from hfsa_spark.extract.fsimage import (
         _decompress_lzo_to_file_parallel,
         _decompress_to_file,
@@ -317,9 +318,9 @@ def test_parallel_lzo_section_matches_sequential(tmp_path, monkeypatch):
     assert n_par == n_seq == sum(o for o, _ in blocks)
     assert par.read_bytes() == seq.read_bytes()
 
-    # and the integrated path picks the parallel branch under the env
-    # threshold override, producing identical bytes again
-    monkeypatch.setenv("HFSA_LZO_PARALLEL_MIN", "1")
+    # and the integrated path picks the parallel branch under a lowered
+    # size threshold, producing identical bytes again
+    monkeypatch.setattr(fsimage, "_LZO_PARALLEL_MIN", 1)
     via = tmp_path / "via.out"
     with open(via, "wb") as f:
         f.write(b"prefix--")  # parallel write must respect prior content
@@ -334,6 +335,7 @@ def test_parallel_lzo_falls_back_on_multichunk_blocks(tmp_path, monkeypatch):
     decode it exactly (the r9 multi-chunk regression fixture shape)."""
     import struct
 
+    from hfsa_spark.extract import fsimage
     from hfsa_spark.extract.fsimage import (
         _decompress_lzo_to_file_parallel,
         _decompress_to_file,
@@ -356,7 +358,7 @@ def test_parallel_lzo_falls_back_on_multichunk_blocks(tmp_path, monkeypatch):
         )
         is None
     )
-    monkeypatch.setenv("HFSA_LZO_PARALLEL_MIN", "1")
+    monkeypatch.setattr(fsimage, "_LZO_PARALLEL_MIN", 1)
     out = tmp_path / "mc.out"
     with open(out, "wb") as f:
         n = _decompress_to_file(str(src), 0, len(stream), f, "LzoCodec")

@@ -41,7 +41,9 @@ U50 = st.integers(min_value=0, max_value=2**50)
 QUOTA = st.one_of(st.just(-1), st.integers(min_value=0, max_value=2**50))
 MODE = st.integers(min_value=0, max_value=0xFFFF)
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
-CODEC = st.sampled_from([None, "gzip", "lz4", "snappy", "bzip2", "zstd", "lzo", "lzop"])
+CODEC = st.sampled_from(
+    [None, "default", "gzip", "lz4", "snappy", "bzip2", "zstd", "lzo", "lzop"]
+)
 
 
 @st.composite

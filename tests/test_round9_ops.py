@@ -502,8 +502,8 @@ def test_bucketed_evolve_then_vacuum_keeps_mixed_eras_readable(
 
 def test_decompress_to_file_truncated_block_stream_raises(tmp_path):
     """A corrupt/truncated lz4 section must raise the clear truncation
-    error, never read into the next section (the streaming twin of
-    _block_stream_decompress's check)."""
+    error, never read into the next section (the same bounded section
+    reader as the in-memory _decompress)."""
     import struct as _struct
 
     import pyarrow as pa
